@@ -157,10 +157,10 @@ class IncrementalRunSpec extends SparkSpec {
     val store = s"$root/store"; val meta = s"$root/meta"; val rollup = s"$root/rollup"
     new java.io.File(store).mkdirs()
     // Simulated crash: b0001's batch file landed, but neither the
-    // metadata rewrite nor the rollup merge happened. Before this round
-    // the replay below lost docs 6-8 forever: repair merges+marks b0001,
-    // and the grown feed's extra rows were rewritten into the MARKED
-    // file, which the rollup never reads again (SURVEY §7.5's corner).
+    // metadata rewrite nor the rollup merge happened. Repair merges and
+    // marks b0001, so the grown feed's extra rows must land in a fresh
+    // sub-batch: rewritten into the MARKED file, the rollup would never
+    // read them.
     val feed1 = (1L to 5L).map(i => doc(i, "A")).toDF("doc_id", "source", "text")
     IncrementalIngest.appendBatch(feed1, store, "b0001")
     val grown = feed1.unionByName(
@@ -222,5 +222,139 @@ class IncrementalRunSpec extends SparkSpec {
     val s2 = IncrementalRun.run(spark, feed, store, meta, rollup, "b0001")
     assert(s2.nNewIds == 0 && s2.nIngested == 0)
     assert(spark.read.parquet(rollup).collect().toSeq == before)
+  }
+
+  private def copyDir(from: String, to: String): Unit = {
+    val (src, dst) = (java.nio.file.Paths.get(from), java.nio.file.Paths.get(to))
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val t = dst.resolve(src.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally walk.close()
+  }
+
+  private def rows(path: String) =
+    spark.read.parquet(path).orderBy("doc_id").collect().toSeq
+
+  private def rollupRows(path: String) =
+    spark.read.parquet(path).orderBy("source").collect().toSeq
+
+  private def swapDebris(root: String): Seq[String] =
+    Seq("meta", "rollup").flatMap(t => Seq(s"${t}_rewrite", s"${t}_old"))
+      .filter(d => new java.io.File(s"$root/$d").exists())
+
+  test("a crash in any window of a state-table swap recovers on the next run") {
+    // Pass 1 seeds the state; pass 2 (ingest, backfill, duplicates) is
+    // the pass a crash cuts; the next run replays it with the same feed
+    // and batchId. Snapshots of the uninterrupted run after each pass let
+    // each case rebuild exactly the directories a crash would leave.
+    val feed1 = (1L to 10L).map(i => doc(i, if (i % 2 == 0) "A" else "B"))
+      .toDF("doc_id", "source", "text")
+    val feed2 = feed1.unionByName(((11L to 16L).map(i => doc(i, "A")) ++
+      (201L to 203L).map(i => doc(i, "B")) ++
+      Seq((101L, "B", "unique content 3"), (102L, "A", "unique content 4")))
+      .toDF("doc_id", "source", "text"))
+    def pass(root: String, feed: org.apache.spark.sql.DataFrame, bid: String) =
+      IncrementalRun.run(spark, feed, s"$root/store", s"$root/meta",
+        s"$root/rollup", bid)
+    val base = Files.createTempDirectory("graft_irun_swap_").toString
+    val ref = s"$base/ref"
+    new java.io.File(s"$ref/store").mkdirs()
+    // ids 201-203 known without sha256: pass 2 backfills them
+    Seq((201L, "B"), (202L, "B"), (203L, "B")).toDF("doc_id", "source")
+      .select($"doc_id", $"source",
+        lit(null).cast("string").as("sha256"), lit("pending").as("status"))
+      .write.parquet(s"$ref/meta")
+    pass(ref, feed1, "b0001")
+    copyDir(ref, s"$base/after1")
+    val s2 = pass(ref, feed2, "b0002")
+    assert(s2 == IncrementalRun.Summary(21, 8, 3, 6, 2, 6), s"$s2")
+    copyDir(ref, s"$base/after2")
+    val replayRef = pass(ref, feed2, "b0002")
+    assert(swapDebris(ref).isEmpty, "a completed pass leaves no swap dirs")
+    val (metaRef, rollupRef) = (rows(s"$ref/meta"), rollupRows(s"$ref/rollup"))
+
+    // Each case: the state-table dir layout a crash leaves, as
+    // (table, live, _rewrite, _old) with "pre"/"post" naming the table's
+    // version before/after pass 2, plus whether the build still holds its
+    // _pending flag. A crash in the metadata swap precedes the rollup
+    // merge, so the rollup is "pre" and b0002 unmarked; a crash in the
+    // rollup swap follows the metadata rewrite, so the metadata is "post".
+    case class Crash(name: String, table: String, live: Option[String],
+        build: Option[String], old: Option[String], pending: Boolean)
+    val cases = Seq("meta", "rollup").flatMap { t => Seq(
+      Crash(s"$t: build written, not committed", t, Some("pre"), Some("post"), None, true),
+      Crash(s"$t: build committed", t, Some("pre"), Some("post"), None, false),
+      Crash(s"$t: live dir moved aside", t, None, Some("post"), Some("pre"), false),
+      Crash(s"$t: before _old is dropped", t, Some("post"), None, Some("pre"), false))
+    }
+    cases.zipWithIndex.foreach { case (c, i) =>
+      val root = s"$base/crash$i"
+      copyDir(s"$base/after2", root)
+      // put `table`'s version from before ("pre") or after ("post") pass 2 at `dir`
+      def place(table: String, version: String, dir: String): Unit = {
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$root/$dir"))
+        copyDir(s"$base/after${if (version == "pre") 1 else 2}/$table", s"$root/$dir")
+      }
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$root/${c.table}"))
+      c.live.foreach(v => place(c.table, v, c.table))
+      c.build.foreach(v => place(c.table, v, s"${c.table}_rewrite"))
+      if (c.pending) new java.io.File(s"$root/${c.table}_rewrite/_pending").createNewFile()
+      c.old.foreach(v => place(c.table, v, s"${c.table}_old"))
+      if (c.table == "meta") place("rollup", "pre", "rollup")
+      // b0002's marker commits with the rollup build that merged it
+      if (c.table == "meta" || c.pending)
+        new java.io.File(s"$root/rollup_merged/b0002").delete()
+
+      val replay = pass(root, feed2, "b0002")
+      assert(swapDebris(root).isEmpty, s"${c.name}: swap dirs survived the pass")
+      assert(rows(s"$root/meta") == metaRef, s"${c.name}: metadata differs")
+      assert(rollupRows(s"$root/rollup") == rollupRef, s"${c.name}: rollup differs")
+      // A committed swap resolves to pass 2's result, so the replay is the
+      // same no-op as after an uninterrupted pass. An uncommitted
+      // metadata build rolls back: the replay redoes the metadata, and
+      // finds pass 2's content already stored.
+      if (c.table == "rollup" || !c.pending) assert(replay == replayRef, s"${c.name}: $replay")
+      else assert(replay == s2.copy(nIngested = 0, nRollupDeltaRows = 0), s"${c.name}: $replay")
+    }
+  }
+
+  test("one pass over every planted class stays within its Spark job budget") {
+    val root = Files.createTempDirectory("graft_irun_jobs_").toString
+    val store = s"$root/store"; val meta = s"$root/meta"; val rollup = s"$root/rollup"
+    new java.io.File(store).mkdirs()
+    // ids 1-5 known without sha256 (legacy rows awaiting backfill)
+    Seq((1L, "A"), (2L, "A"), (3L, "B"), (4L, "B"), (5L, "B"))
+      .toDF("doc_id", "source")
+      .select($"doc_id", $"source",
+        lit(null).cast("string").as("sha256"), lit("pending").as("status"))
+      .write.parquet(meta)
+    // two earlier passes leave two batch files
+    IncrementalRun.run(spark, (6L to 20L).map(i => doc(i, "A"))
+      .toDF("doc_id", "source", "text"), store, meta, rollup, "b0001")
+    IncrementalRun.run(spark, (21L to 30L).map(i => doc(i, "B"))
+      .toDF("doc_id", "source", "text"), store, meta, rollup, "b0002")
+    // replayed 6-15, backfill 1-5, novel 31-40, duplicate content 201-203
+    val feed = ((6L to 15L).map(i => doc(i, "A")) ++
+      (1L to 5L).map(i => doc(i, "B")) ++ (31L to 40L).map(i => doc(i, "A")) ++
+      Seq((201L, "A", "unique content 6"), (202L, "B", "unique content 21"),
+        (203L, "B", "unique content 22"))).toDF("doc_id", "source", "text")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.SparkInternals.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    val s = try {
+      val s = IncrementalRun.run(spark, feed, store, meta, rollup, "b0003")
+      org.apache.spark.sql.graft.SparkInternals.drainListenerBus(spark.sparkContext)
+      s
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(s == IncrementalRun.Summary(28, 13, 5, 10, 3, 10), s"$s")
+    // A second scan of a store projection or a second write of a state
+    // table shows up here before it shows up in a benchmark.
+    assert(jobs.get() <= 25, s"one pass ran ${jobs.get()} Spark jobs")
   }
 }

@@ -48,4 +48,18 @@ class IngestSpec extends SparkSpec {
     assert(n == 0)
     assert(!new java.io.File(s"$store/b0002.parquet").exists())
   }
+
+  test("a store file without the hash column makes appendBatch throw") {
+    val store = tmpStore()
+    IncrementalIngest.appendBatch(
+      Seq((1L, "alpha")).toDF("doc_id", "text"), store, "b0001")
+    // a foreign parquet file in the store: a schema'd read would give it
+    // null hashes and dedup nothing against it
+    Seq((2L, "beta")).toDF("doc_id", "text")
+      .write.parquet(s"$store/foreign.parquet")
+    val e = intercept[IllegalStateException](IncrementalIngest.appendBatch(
+      Seq((3L, "beta")).toDF("doc_id", "text"), store, "b0002"))
+    assert(e.getMessage.contains(IncrementalIngest.hashCol))
+    assert(!new java.io.File(s"$store/b0002.parquet").exists())
+  }
 }
