@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
   * The fold order is deliberately sequential (left fold over the array) so
   * results are bit-deterministic and reproducible against the DuckDB oracle
   * (which sums lists sequentially too); final outputs are rounded anyway.
-  * Round-2 plan (SURVEY.md §7): replace the hot dot-product with a custom
-  * Catalyst Expression with doGenCode to get it into whole-stage codegen.
   */
 object VectorFunctions {
 
@@ -18,7 +16,7 @@ object VectorFunctions {
   def asDouble(v: Column): Column = v.cast("array<double>")
 
   /** Sequential-sum dot product — custom codegen'd Catalyst expression
-    * (graft.expressions.DotProduct); same left-fold order as the HOF
+    * ([[org.apache.spark.sql.graft.DotProduct]]); same left-fold order as the HOF
     * `aggregate(zip_with(...))` form and the DuckDB oracle's list_sum, so
     * results stay bit-identical, but it stays inside whole-stage codegen.
     */

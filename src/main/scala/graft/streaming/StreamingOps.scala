@@ -389,7 +389,7 @@ object StreamingOps {
         val bid = f"batch$batchId%06d"
         val b = batch.toDF()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // ONE fused SegmentShingleHashes pass per batch serves probe,
+        // ONE fused hashing.segmentShingleHashes pass per batch serves probe,
         // rollup AND index growth (VERDICT r14 #8): the meta frame the
         // probe persisted is filtered to kept docs for the append —
         // formerly the batch was segmented + tokenized three times.

@@ -69,4 +69,35 @@ class ExtensionsSpec extends SparkSpec {
       .select(operators.Dedup.simhash($"text").as("fp")).as[Long].head()
     assert(viaSql == viaCol)
   }
+
+  test("hyperplane planes outside 1..64 throw on both surfaces") {
+    GraftExtensions.register(spark)
+    import org.apache.spark.sql.graft.GraftFunctions
+    // bit p of the signature is 1L << p and the JVM masks a shift
+    // distance to 6 bits, so plane 64 would fold into bit 0
+    for (planes <- Seq(0, 65)) {
+      intercept[IllegalArgumentException](GraftFunctions.hyperplane_sig($"v", planes))
+      intercept[IllegalArgumentException](GraftFunctions.hyperplane_probes($"v", planes, 2))
+      intercept[Exception] {
+        spark.sql(s"SELECT graft_hyperplane_sig(array(1.0d, -1.0d), $planes)").collect()
+      }
+    }
+    val sig = spark.sql("SELECT graft_hyperplane_sig(array(1.0d, -1.0d), 64)")
+      .as[Long].head()
+    assert(sig == org.apache.spark.sql.graft.hashing.hyperplaneSig(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(Array(1.0, -1.0)), 64))
+  }
+
+  test("SQL arguments cast like built-ins; a non-castable one fails analysis") {
+    GraftExtensions.register(spark)
+    // an int argument to a string kernel is implicitly cast
+    val sh = spark.sql("SELECT graft_word_shingles(12345, 1) AS s")
+      .collect()(0).getSeq[String](0)
+    assert(sh == Seq("12345"))
+    // array<int> has no cast to string: rejected at analysis, not at run time
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT graft_word_shingles(array(1), 2)")
+    }
+    assert(err.getCondition.startsWith("DATATYPE_MISMATCH"), err.getMessage)
+  }
 }

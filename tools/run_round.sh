@@ -4,11 +4,15 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# Size Spark to the host the way the tier-1 test command does: every
+# core, and half the RAM clamped to 2–8 GB for the driver heap.
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
+
 echo "== sbt test =="
 sbt -batch test 2>&1 | grep -E "Tests: |FAILED" | head -3
 
 echo "== verify sf0.01 + duckdb selfcheck =="
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/vout" 2>&1 \
   | grep -E "\[verify\].*failed" || true
 python3 tools/selfcheck.py /tmp/vout /root/testdata/sf0.01 | tail -3
@@ -16,14 +20,11 @@ python3 tools/selfcheck.py /tmp/vout /root/testdata/sf0.01 | tail -3
 echo "== verify sf0.001 + duckdb selfcheck =="
 # scale-dependent value coincidences (round-half ties) show up at one
 # SF and not another — always check both
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/vout001" 2>&1 \
   | grep -E "\[verify\].*failed" || true
 python3 tools/selfcheck.py /tmp/vout001 /root/testdata/sf0.001 | tail -3
 
 echo "== bench sf0.1 =="
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-  SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-24g} \
   sbt -batch "runMain graft.Bench" 2>&1 | grep -oE '\{"metric".*'
 
 echo "== plans =="
